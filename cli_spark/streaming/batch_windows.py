@@ -25,6 +25,7 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import run_stream, wait_until
 from cli_spark.tables import events_stream, load_table
 
 
@@ -523,11 +524,10 @@ def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFram
     (the single-file testdata otherwise arrives in ONE batch and
     cross-batch state accumulation never executes — q103's documented
     limitation), aggregated under complete mode so per-window state
-    must accumulate correctly ACROSS batches. The result is read
-    after the source reports exhaustion; complete-mode aggregation is
+    must accumulate correctly ACROSS batches. The stream is drained
+    by `run_stream`; complete-mode aggregation is
     batch-slicing-invariant, so it must equal the batch oracle
     exactly whatever the batch boundaries."""
-    import time
     import uuid as _uuid
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -560,21 +560,18 @@ def q271_streaming_multibatch_true(spark: SparkSession, sf_dir: str) -> DataFram
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
     return out
+
+
+def _past_first_batch(query) -> bool:
+    """Restart-recovery kill point: batch 1 or later has committed
+    input rows, so stopping now lands mid-stream."""
+    p = query.lastProgress
+    return p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0
 
 
 def _run_restart_recovery(
@@ -594,7 +591,6 @@ def _run_restart_recovery(
     import json
     import shutil
     import tempfile
-    import time
     import uuid as _uuid
 
     from cli_spark.sources.replay_datasource import register_replay_source
@@ -645,13 +641,10 @@ def _run_restart_recovery(
             .trigger(processingTime="200 milliseconds")
             .start()
         )
-        t0 = time.time()
-        while time.time() - t0 < 60:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
-                break
-            time.sleep(0.05)
-        q1.stop()
+        try:
+            wait_until(lambda: _past_first_batch(q1), query=q1)
+        finally:
+            q1.stop()
         q1.awaitTermination()
         p1 = spark.table(name1)
         p1_rows, p1_schema = p1.collect(), p1.schema
@@ -670,17 +663,7 @@ def _run_restart_recovery(
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = q2.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q2.stop()
-            q2.awaitTermination()
+        run_stream(q2)
         for p in q2.recentProgress:
             src = (p.get("sources") or [{}])[0]
             so = src.get("startOffset")
@@ -812,7 +795,6 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
     hourly census cut at the last finalized hour — any state lost
     between the chained operators, or a mis-propagated watermark,
     breaks the hash."""
-    import time
     import uuid as _uuid
 
     import pyarrow.parquet as pq
@@ -858,17 +840,7 @@ def q354_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFram
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
@@ -960,7 +932,6 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import shutil
     import tempfile
-    import time
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1013,17 +984,7 @@ def q279_streaming_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         sink = spark.table(name)
         out = spark.createDataFrame(sink.collect(), sink.schema)
         spark.catalog.dropTempView(name)
@@ -1079,7 +1040,6 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
     by this query's bit-exact oracle match across ~20 batches."""
     import shutil
     import tempfile
-    import time
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1106,17 +1066,7 @@ def q285_streaming_dedup_multibatch(spark: SparkSession, sf_dir: str) -> DataFra
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         kept = spark.read.parquet(f"{out_root}/kept")
         result = kept.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_unique"),
@@ -1175,7 +1125,6 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
     parquet sink."""
     import shutil
     import tempfile
-    import time
     from collections.abc import Iterator
 
     import pandas as pd
@@ -1235,17 +1184,7 @@ def q294_stateful_running_totals_graded(spark: SparkSession, sf_dir: str) -> Dat
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         upd = spark.read.parquet(f"{out_root}/upd")
         from pyspark.sql.window import Window as _Win
 
@@ -1288,7 +1227,6 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the rank has full tie-breaks. The memory sink holds K rows,
     not the keyed state, so the driver footprint is K regardless of
     user cardinality."""
-    import time
 
     from cli_spark.sources.replay_datasource import register_replay_source
 
@@ -1319,17 +1257,7 @@ def q306_streaming_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 5 and time.time() - t0 < 240:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
@@ -1403,7 +1331,6 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
     day's data — and the oracle reproduces that strict cut."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1456,17 +1383,7 @@ def q318_streaming_outer_join_true(spark: SparkSession, sf_dir: str) -> DataFram
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         rows = spark.read.parquet(f"{out_root}/rows")
         matched = (
             rows.filter(F.col("e_user").isNotNull())
@@ -1520,7 +1437,6 @@ def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataF
     equal the batch oracle exactly; correctness is batch-slicing- AND
     partition-slicing-invariant, so any row lost or duplicated at a
     partition boundary breaks the hash."""
-    import time
     import uuid as _uuid
 
     import pyarrow.parquet as pq
@@ -1558,17 +1474,7 @@ def q330_streaming_partitioned_source(spark: SparkSession, sf_dir: str) -> DataF
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 180:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
@@ -1605,7 +1511,6 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
     final state is not."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1643,13 +1548,10 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
             .trigger(processingTime="200 milliseconds")
             .start()
         )
-        t0 = time.time()
-        while time.time() - t0 < 60:
-            p = q1.lastProgress
-            if p is not None and p["batchId"] >= 1 and p["numInputRows"] > 0:
-                break
-            time.sleep(0.05)
-        q1.stop()
+        try:
+            wait_until(lambda: _past_first_batch(q1), query=q1)
+        finally:
+            q1.stop()
         q1.awaitTermination()
 
         # phase 2: restart from the checkpoint; the in-flight batch
@@ -1660,17 +1562,7 @@ def q331_streaming_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFram
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = q2.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q2.stop()
-            q2.awaitTermination()
+        run_stream(q2)
         rows = spark.read.parquet(out_root + "/rows")
         result = (
             rows.groupBy(F.window("ts", "1 hour"))
@@ -1721,7 +1613,6 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the census is the q100 two-level distinct shape."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1802,17 +1693,7 @@ def q337_backfill_live_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         tail = spark.read.parquet(f"{out_root}/rows")
         # The merge is gap-free iff the file's replay order equals
         # event_id order (first `cutover` file rows = smallest
@@ -1891,7 +1772,6 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -1919,17 +1799,7 @@ def q338_streaming_checksum_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 3 and time.time() - t0 < 180:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         total, acc, n_batches = 0, 0, 0
         for f in sorted(_os.listdir(out_root)):
             if not f.startswith("batch_"):
@@ -2022,7 +1892,6 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
     eviction cuts exactly."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2076,17 +1945,7 @@ def q370_streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         rows = spark.read.parquet(f"{out_root}/rows")
         matched = (
             rows.filter(F.col("p_id").isNotNull() & F.col("e_id").isNotNull())
@@ -2158,7 +2017,6 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is part of the contract."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2189,17 +2047,7 @@ def q371_statestore_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         spark.catalog.dropTempView(name)
         md = spark.read.format("state-metadata").load(ckpt).collect()
         if len(md) != 1 or md[0]["operatorName"] != "stateStoreSave":
@@ -2254,7 +2102,6 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
     statistic, finish the non-mergeable shape in batch."""
     import shutil
     import tempfile
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2287,17 +2134,7 @@ def q383_streaming_pivot_foreachbatch(spark: SparkSession, sf_dir: str) -> DataF
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, time.time()
-            while idle < 5 and time.time() - t0 < 240:
-                time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         partials = spark.read.parquet(f"{out_root}/partials")
         types = ["click", "error", "purchase", "signup", "view"]
         pivoted = (
@@ -2356,7 +2193,6 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
     join at job start) is the SCD2-correct pattern. Graded: per-tier
     census of the drained stream; the oracle closed-forms the version
     arithmetic and reaches the same numbers without any join."""
-    import time
 
     import pyarrow.parquet as pq
 
@@ -2409,18 +2245,7 @@ def q386_streaming_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFram
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        import time as _t
-        idle, t0 = 0, _t.time()
-        while idle < 5 and _t.time() - t0 < 240:
-            _t.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
@@ -2661,19 +2486,7 @@ def q395_streaming_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            import time as _time
-
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = q.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            q.stop()
-            q.awaitTermination()
+        run_stream(q)
         if not os.path.isdir(out_dir + "/_spark_metadata"):
             raise RuntimeError("q395: file sink wrote no _spark_metadata log")
         # plant an orphan: copy a committed part file under an
@@ -2744,9 +2557,8 @@ def _stream_join_sides(spark: SparkSession, sf_dir: str):
 
 def _drain_foreach_parquet(spark: SparkSession, joined: DataFrame,
                            out_root: str) -> DataFrame:
-    """Run a streaming frame into an append parquet foreachBatch sink
-    until the replay sources go idle; return the written rows."""
-    import time as _time
+    """Drain a streaming frame into an append parquet foreachBatch
+    sink with `run_stream`; return the written rows."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(f"{out_root}/rows")
@@ -2756,17 +2568,7 @@ def _drain_foreach_parquet(spark: SparkSession, joined: DataFrame,
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, _time.time()
-        while idle < 5 and _time.time() - t0 < 240:
-            _time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     return spark.read.parquet(f"{out_root}/rows")
 
 
@@ -2954,7 +2756,6 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.4 fixed) either flushes windows early (missing late-batch
     matches) or never flushes them; both break the bit-exact match
     with the drained-to-exhaustion oracle."""
-    import time as _time
     import uuid as _uuid
 
     import pyarrow.parquet as pq
@@ -3015,17 +2816,7 @@ def q409_streaming_join_then_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, _time.time()
-        while idle < 3 and _time.time() - t0 < 180:
-            _time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
+    run_stream(query)
     sink = spark.table(name)
     out = spark.createDataFrame(sink.collect(), sink.schema)
     spark.catalog.dropTempView(name)
@@ -3060,7 +2851,6 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     consistency contract fan-out exists to provide)."""
     import shutil
     import tempfile
-    import time as _time
 
     import pyarrow.parquet as pq
 
@@ -3092,17 +2882,7 @@ def q411_streaming_fanout_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
 
         def census(path: str, prefix: str) -> DataFrame:
             return spark.read.parquet(path).groupBy("event_type").agg(
@@ -3177,7 +2957,6 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader is graded separately from the join output."""
     import shutil
     import tempfile
-    import time as _time
 
     pur, err, cond = _stream_join_sides(spark, sf_dir)
     joined = pur.join(err, cond, "inner")
@@ -3193,17 +2972,7 @@ def q414_statestore_join_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="100 milliseconds")
             .start()
         )
-        try:
-            idle, t0 = 0, _time.time()
-            while idle < 5 and _time.time() - t0 < 240:
-                _time.sleep(0.3)
-                p = query.lastProgress
-                if p is None:
-                    continue
-                idle = idle + 1 if p["numInputRows"] == 0 else 0
-        finally:
-            query.stop()
-            query.awaitTermination()
+        run_stream(query)
         left = (
             spark.read.format("statestore")
             .option("path", ckpt).option("joinSide", "left").load()

@@ -1,5 +1,18 @@
-"""foreachBatch partial-drain helper shared by the TRUE-stream
-mergeable-sketch queries (q473/q476/q479/q481/q486/q491/q493/q496/q500).
+"""The engine's only drain and wait paths for Structured Streaming
+queries, plus the foreachBatch partial-drain helper shared by the
+TRUE-stream mergeable-sketch queries
+(q473/q476/q479/q481/q486/q491/q493/q496/q500).
+
+``run_stream(query)`` drains a started query: ``processAllAvailable()``
+returns once every offset the sources report has been committed AND no
+no-data batch is pending (so an append-mode watermark flush has run),
+then the query is stopped. It raises instead of returning partial
+output: ``TimeoutError`` when the run outlives ``timeout_s`` (the query
+is stopped first), and the query's ``StreamingQueryException`` when a
+batch fails. ``wait_until(pred)`` is the one mid-stream wait (restart
+recovery's phase-1 kill point, the unbounded rate sources): it polls
+``pred`` and raises ``TimeoutError`` if it never holds. No other code
+under ``cli_spark/streaming`` sleeps or runs its own poll loop.
 
 Measured motivation (round 15 optimization, guide §1/§6): with the
 partials round-tripped through per-batch `write.mode("append")
@@ -29,9 +42,73 @@ to prove.
 
 from __future__ import annotations
 
+import threading
+import time
 from typing import Callable
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+# One wall-clock budget for every drain and wait. The slowest graded
+# stream finishes in under a minute at sf0.01; a run that takes ten
+# times longer is a fault, and it surfaces as TimeoutError rather than
+# as whatever rows the sink happened to hold.
+STREAM_TIMEOUT_S = 600.0
+
+
+def run_stream(query: StreamingQuery, *,
+               timeout_s: float = STREAM_TIMEOUT_S) -> None:
+    """Drain a started streaming query to exhaustion, then stop it.
+
+    Raises ``TimeoutError`` if the drain has not finished after
+    ``timeout_s`` seconds (a timer stops the query, which ends the
+    blocked ``processAllAvailable`` within one 10 s progress-lock
+    wait), and re-raises the ``StreamingQueryException`` of a failed
+    batch. The query is inactive whenever this returns or raises."""
+    timed_out = threading.Event()
+
+    def _expire() -> None:
+        timed_out.set()
+        query.stop()
+
+    timer = threading.Timer(timeout_s, _expire)
+    timer.daemon = True
+    timer.start()
+    try:
+        query.processAllAvailable()
+    finally:
+        timer.cancel()
+        query.stop()
+    if timed_out.is_set():
+        raise TimeoutError(
+            f"stream {query.name or query.id} did not drain within "
+            f"{timeout_s:g} s; stopped")
+    query.awaitTermination()
+
+
+def wait_until(pred: Callable[[], bool], *,
+               query: StreamingQuery | None = None,
+               timeout_s: float = STREAM_TIMEOUT_S,
+               poll_s: float = 0.05) -> None:
+    """Poll ``pred`` every ``poll_s`` seconds until it returns True;
+    raise ``TimeoutError`` if it is still false after ``timeout_s``.
+    For waits that must stop a query mid-stream, where
+    ``run_stream``'s drain-to-exhaustion does not apply. If ``query``
+    terminates before ``pred`` holds, its failure is re-raised (or a
+    ``RuntimeError`` if it ended cleanly) instead of waiting out the
+    timeout."""
+    deadline = time.monotonic() + timeout_s
+    while not pred():
+        if query is not None and not query.isActive:
+            query.awaitTermination()
+            raise RuntimeError(
+                f"stream {query.name or query.id} ended before the "
+                "awaited condition held")
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"condition not met within {timeout_s:g} s")
+        time.sleep(poll_s)
 
 
 # Hard per-batch ceiling enforcing the sketch-grain contract in CODE
@@ -63,34 +140,38 @@ def drain_partials(
     (q453's parquet append is the reference)."""
     rows: list = []
     schema_cell: list = []
+    overflow: list = []
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         partial = partial_of(batch_df, batch_id)
         if not schema_cell:
             schema_cell.append(partial.schema)
-        batch_rows = partial.collect()
-        if len(batch_rows) > MAX_PARTIAL_ROWS_PER_BATCH:
-            raise ValueError(
-                f"drain_partials: batch {batch_id} produced "
-                f"{len(batch_rows)} partial rows (> "
-                f"{MAX_PARTIAL_ROWS_PER_BATCH}) — partials must be "
+        # collect at most one row past the ceiling: enough to detect a
+        # fact-grain partial without pulling all of it to the driver
+        ceiling = MAX_PARTIAL_ROWS_PER_BATCH
+        batch_rows = partial.limit(ceiling + 1).collect()
+        if len(batch_rows) > ceiling:
+            overflow.append(
+                f"drain_partials: batch {batch_id} produced more than "
+                f"{ceiling} partial rows — partials must be "
                 "sketch-grain; use a durable sink for fact-grain "
                 "streams"
             )
+            raise ValueError(overflow[0])
         rows.extend(batch_rows)
 
     from cli_spark.session import scoped_replay_ckpt_manager
 
-    # direct-write checkpoint file manager for the bounded replay run
-    # (round-16: ~1.8 s/query of rename-protocol cost removed; see
-    # session.replay_ckpt_manager for the measurement and the
-    # production parameterization)
+    # scoped checkpoint file manager for the bounded replay run; the
+    # comment above session._DIRECT_CKPT_MANAGER says what was measured
     with scoped_replay_ckpt_manager(spark):
         query = stream.writeStream.foreachBatch(_sink).start()
         try:
-            query.processAllAvailable()
-        finally:
-            query.stop()
+            run_stream(query)
+        except StreamingQueryException as exc:
+            if overflow:
+                raise ValueError(overflow[0]) from exc
+            raise
     if not schema_cell:  # stream produced no micro-batch at all
         raise RuntimeError("replay stream delivered no micro-batch")
     return spark.createDataFrame(rows, schema_cell[0])

@@ -11,7 +11,6 @@ run, document it, encode it identically in the oracle).
 
 from __future__ import annotations
 
-import time
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,23 +23,8 @@ from cli_spark.functions.determinism import (
     ts_str,
 )
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import run_stream, wait_until
 from cli_spark.tables import load_table
-
-
-def _run_until_idle(query, timeout_s: float = 180.0, idle_polls: int = 3) -> None:
-    """Poll a processing-time-triggered stream until it has drained
-    (idle_polls consecutive zero-input progress reports), then stop."""
-    try:
-        idle, t0 = 0, time.time()
-        while idle < idle_polls and time.time() - t0 < timeout_s:
-            time.sleep(0.3)
-            p = query.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-    finally:
-        query.stop()
-        query.awaitTermination()
 
 
 def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
@@ -140,7 +124,7 @@ def q425_multiwatermark_union(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(processingTime="100 milliseconds")
                 .start()
             )
-            _run_until_idle(q)
+            run_stream(q)
             return _drain_memory_sink(spark, name)
         finally:
             if prev is None:
@@ -251,7 +235,7 @@ def q426_state_event_time_timeout(spark: SparkSession, sf_dir: str) -> DataFrame
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    _run_until_idle(q)
+    run_stream(q)
     raw = _drain_memory_sink(spark, name)
     return (
         raw.groupBy((F.col("user_id") % 10).alias("user_bucket"))
@@ -311,16 +295,13 @@ def q427_rate_micro_batch_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="100 milliseconds")
         .start()
     )
+    need = rows_per_batch * n_batches
     try:
-        need = rows_per_batch * n_batches
-        t0 = time.time()
-        while time.time() - t0 < 120:
-            if spark.table(name).count() >= need:
-                break
-            time.sleep(0.3)
+        wait_until(lambda: spark.table(name).count() >= need,
+                   query=q, poll_s=0.3)
     finally:
         q.stop()
-        q.awaitTermination()
+    q.awaitTermination()
     sink = spark.table(name)
     rows = sink.filter(F.col("value") < need).collect()
     spark.catalog.dropTempView(name)
@@ -411,23 +392,16 @@ def q444_streaming_observed_metrics(spark: SparkSession,
         return out
 
     try:
-        t0 = time.time()
-        while time.time() - t0 < 120:
-            # wait on the PROGRESS stream, not the sink — the grade
-            # reads observedMetrics, and the last batch's progress
-            # event can trail its sink rows
-            if len(_qualifying()) >= n_batches:
-                break
-            time.sleep(0.3)
+        # wait on the PROGRESS stream, not the sink — the grade reads
+        # observedMetrics, and the last batch's progress event can
+        # trail its sink rows
+        wait_until(lambda: len(_qualifying()) >= n_batches,
+                   query=q, poll_s=0.3)
     finally:
         q.stop()
-        q.awaitTermination()
+    q.awaitTermination()
     metrics = _qualifying()
     spark.catalog.dropTempView(name)
-    if len(metrics) < n_batches:
-        raise RuntimeError(
-            f"q444: only {len(metrics)} observed batches reported metrics "
-            f"(need {n_batches})")
     return spark.createDataFrame(
         sorted(metrics),
         "batch_rank int, n_rows int, value_sum int",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cli_spark.plans.registry import register
+from cli_spark.streaming.drain import run_stream
 from cli_spark.tables import load_table
 
 # Echo-stream parameters, in PER-MILLE OF THE EVENT-TIME SPAN so the
@@ -236,7 +237,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
                 .parquet(f"{out_root}/emitted")
             )
 
-        # default trigger + processAllAvailable, NOT availableNow:
+        # default trigger + run_stream, NOT availableNow:
         # PythonMicroBatchStream implements neither
         # SupportsAdmissionControl nor SupportsTriggerAvailableNow
         # (verified against the Spark 4.1.2 class), so an
@@ -249,13 +250,11 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
         # per-partition fixed cost EVERY batch — size it to the
         # ~5k-row batch grain, not the core count (session.py
         # stream_partitions; round-15 optimization, guide §2.2/§5)
-        # scoped_replay_ckpt_manager (round 16): the rename-based
-        # manager paid create-temp + rename for every offset/commit
-        # log entry AND every state-store delta file (8 partitions x
-        # ~40 batches); the direct-write manager drops that protocol
-        # for this throwaway per-invocation checkpoint (measured on
-        # the drained siblings: ~1.8 s/run; here it also covers the
-        # state store's 320 delta commits).
+        # scoped_replay_ckpt_manager (round 16): the checkpoint file
+        # manager for this throwaway per-invocation checkpoint, which
+        # here also writes the state store's delta files (8
+        # partitions x ~40 batches); the comment above
+        # session._DIRECT_CKPT_MANAGER says what was measured.
         from cli_spark.session import (
             scoped_replay_ckpt_manager,
             scoped_shuffle_partitions,
@@ -264,11 +263,7 @@ def q453_dropdup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
 
         with scoped_shuffle_partitions(spark, stream_partitions()), \
                 scoped_replay_ckpt_manager(spark):
-            query = deduped.writeStream.foreachBatch(sink).start()
-            try:
-                query.processAllAvailable()
-            finally:
-                query.stop()
+            run_stream(deduped.writeStream.foreachBatch(sink).start())
         emitted = spark.read.parquet(f"{out_root}/emitted")
         per_key = emitted.groupBy("event_type", "event_id").agg(
             F.count(F.lit(1)).alias("n_em"))

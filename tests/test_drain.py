@@ -120,3 +120,82 @@ def test_drain_partials_rejects_fact_grain_streams(spark, replay_part, monkeypat
 
     with pytest.raises((ValueError, StreamingQueryException), match="sketch-grain"):
         drain_mod.drain_partials(spark, stream, fact_grain)
+
+
+def test_drain_partials_guard_bounds_the_collect(spark, replay_part, monkeypatch):
+    """The guard collects at most ceiling + 1 rows per batch, so it
+    fires before a fact-grain partial reaches the driver whole; a
+    partial of exactly the ceiling still passes."""
+    import cli_spark.streaming.drain as drain_mod
+
+    register_replay_source(spark)
+
+    def stream():
+        return (
+            spark.readStream.format("replay")
+            .option("path", replay_part)
+            .option("batchRows", 25)
+            .load()
+        )
+
+    def fact_grain(batch_df, batch_id):
+        return batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+
+    monkeypatch.setattr(drain_mod, "MAX_PARTIAL_ROWS_PER_BATCH", 25)
+    assert drain_mod.drain_partials(spark, stream(), fact_grain).count() == 97
+
+    monkeypatch.setattr(drain_mod, "MAX_PARTIAL_ROWS_PER_BATCH", 10)
+    with pytest.raises(ValueError, match="more than 10 partial rows"):
+        drain_mod.drain_partials(spark, stream(), fact_grain)
+
+
+def test_run_stream_times_out_on_unbounded_source(spark):
+    """A `rate-micro-batch` source never runs out (every trigger has a
+    next batch; plain `rate` reports no new data between its per-second
+    ticks): run_stream must stop the query and raise, not return
+    whatever the sink holds."""
+    import time
+
+    from cli_spark.streaming.drain import run_stream
+
+    query = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 10).load()
+        .writeStream.format("noop")
+        .trigger(processingTime="100 milliseconds").start()
+    )
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError):
+        run_stream(query, timeout_s=2)
+    assert not query.isActive
+    assert time.monotonic() - t0 < 30
+
+
+def test_run_stream_reraises_a_failed_batch(spark, replay_part):
+    from pyspark.errors import StreamingQueryException
+
+    from cli_spark.streaming.drain import run_stream
+
+    register_replay_source(spark)
+
+    def failing_sink(batch_df, batch_id):
+        raise RuntimeError("sink exploded")
+
+    query = (
+        spark.readStream.format("replay")
+        .option("path", replay_part)
+        .option("batchRows", 25)
+        .load()
+        .writeStream.foreachBatch(failing_sink).start()
+    )
+    with pytest.raises(StreamingQueryException, match="sink exploded"):
+        run_stream(query)
+    assert not query.isActive
+
+
+def test_wait_until_raises_when_predicate_stays_false():
+    from cli_spark.streaming.drain import wait_until
+
+    with pytest.raises(TimeoutError):
+        wait_until(lambda: False, timeout_s=0.3)
+    wait_until(lambda: True, timeout_s=0)  # already true: no wait

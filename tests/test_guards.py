@@ -72,3 +72,36 @@ def test_q290_sig_cache_single_slot(spark):
     assert set(dedup._Q290_SIG_CACHE) == {"/root/testdata/sf0.01"}
     dedup.q290_lsh_parameter_sweep(spark, "/root/testdata/sf0.01")
     assert set(dedup._Q290_SIG_CACHE) == {"/root/testdata/sf0.01"}
+
+
+def test_streaming_sleeps_only_in_drain_helpers():
+    """Every stream drains through drain.run_stream and every
+    mid-stream wait goes through drain.wait_until; a `sleep(` call
+    anywhere else under cli_spark/streaming (``time.sleep``,
+    ``_time.sleep``, ``_t.sleep``, a bare imported ``sleep``) is a
+    sleep/poll loop coming back."""
+    import ast
+    import pathlib
+
+    import cli_spark.streaming
+
+    allowed = {("drain.py", "run_stream"), ("drain.py", "wait_until")}
+    found = []
+    root = pathlib.Path(cli_spark.streaming.__file__).parent
+    for path in sorted(root.glob("*.py")):
+        tree = ast.parse(path.read_text())
+
+        def visit(node, func):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name == "sleep":
+                    found.append((path.name, func, node.lineno))
+            for child in ast.iter_child_nodes(node):
+                visit(child, func)
+
+        visit(tree, None)
+    stray = [f for f in found if f[:2] not in allowed]
+    assert not stray, f"sleep outside run_stream/wait_until: {stray}"

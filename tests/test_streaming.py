@@ -317,10 +317,10 @@ def test_rate_source_smoke(spark):
         .start()
     )
     try:
-        import time
-        deadline = time.time() + 15
-        while time.time() < deadline and spark.table(name).count() == 0:
-            time.sleep(0.5)
+        from cli_spark.streaming.drain import wait_until
+
+        wait_until(lambda: spark.table(name).count() > 0, query=q,
+                   timeout_s=15, poll_s=0.5)
         pdf = spark.table(name).toPandas()
         assert len(pdf) > 0
         assert set(pdf.columns) == {"timestamp", "value"}
@@ -577,12 +577,12 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
     arrives in one batch and cross-batch semantics go unexercised)
     and the streamed windowed aggregate must equal the batch result
     exactly."""
-    import time
     import uuid
 
     from pyspark.sql import functions as F
 
     from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import run_stream
     from cli_spark.tables import load_table
 
     register_replay_source(spark)
@@ -605,22 +605,13 @@ def test_replay_source_multibatch_equals_batch(spark, sf_dir):
         .trigger(processingTime="200 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 120:
-            time.sleep(0.4)
-            p = q.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert len(data_batches) >= 2, "replay must split into micro-batches"
-        assert sum(p["numInputRows"] for p in data_batches) == batch_total
-        sink = spark.createDataFrame(
-            spark.table(name).collect(), spark.table(name).schema
-        )
-    finally:
-        q.stop()
+    run_stream(q)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) >= 2, "replay must split into micro-batches"
+    assert sum(p["numInputRows"] for p in data_batches) == batch_total
+    sink = spark.createDataFrame(
+        spark.table(name).collect(), spark.table(name).schema
+    )
     batch = load_table(spark, sf_dir, "events").groupBy(
         F.window("ts", "1 hour")
     ).agg(F.count(F.lit(1)).alias("n"))
@@ -803,10 +794,10 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
     finalize the preceding hour, strict (<) semantics would emit
     nothing.  A Spark upgrade flipping the boundary breaks this test
     before it silently flips the q354 oracle."""
-    import time
     import uuid
 
     from cli_spark.sources.replay_datasource import register_replay_source
+    from cli_spark.streaming.drain import run_stream
 
     pdf = pd.DataFrame(
         {
@@ -851,18 +842,8 @@ def test_chained_windows_hour_boundary_emission_cut(spark, tmp_path):
         .trigger(processingTime="100 milliseconds")
         .start()
     )
-    try:
-        idle, t0 = 0, time.time()
-        while idle < 3 and time.time() - t0 < 120:
-            time.sleep(0.3)
-            p = q.lastProgress
-            if p is None:
-                continue
-            idle = idle + 1 if p["numInputRows"] == 0 else 0
-        rows = spark.table(name).collect()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    run_stream(q)
+    rows = spark.table(name).collect()
     # Non-strict cut: the [00:00, 01:00) hour (end == max ts) DID
     # finalize, with exactly the 3 pre-boundary rows; the hour
     # containing the boundary row itself did not.
